@@ -55,28 +55,10 @@ object FlightGrpc {
       case None => Left("invalid ticket: expected " +
         """{"database_name": ..., "sql_query": ...}""")
       case Some((db, sql)) =>
-        // existence, not emptiness: a freshly created or drop-emptied
-        // database is real — queries over it should plan (and fail with
-        // table-not-found where warranted), matching the HTTP bridge
-        if (!f.hasDatabase(db)) Left(s"database not found: $db")
-        else {
-          // plan under the shared temp-view catalog lock, like the bridge
-          val planned = HttpFacade.synchronized {
-            try {
-              HttpFacade.registerMeasurementViews(f.spark,
-                f.measurements(db).flatMap(m =>
-                  f.measurementView(db, m).map(m -> _)))
-              Right(f.spark.sql(sql))
-            } catch {
-              case NonFatal(e) =>
-                Left(Option(e.getMessage).getOrElse(e.getClass.getName))
-            }
-          }
-          planned.map { df =>
-            val bos = new ByteArrayOutputStream()
-            ArrowIpc.writeStream(df, bos)
-            ipcToFlightData(bos.toByteArray).iterator
-          }
+        f.planSql(db, sql).left.map(_._2).map { df =>
+          val bos = new ByteArrayOutputStream()
+          ArrowIpc.writeStream(df, bos)
+          ipcToFlightData(bos.toByteArray).iterator
         }
     }
   }

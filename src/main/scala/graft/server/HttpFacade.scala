@@ -353,18 +353,8 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         case ("POST", "/api/v1/write_pb") => handleWritePb(ex)
         case ("POST", "/api/v2/flight/do_get") => handleDoGet(ex)
         case ("POST", "/api/v2/flight/do_put") => handleDoPut(ex)
-        case ("POST", "/api/v1/storage/read_filter") => handleReadFilter(ex)
-        case ("POST", "/api/v1/storage/read_group") => handleReadGroup(ex)
-        case ("POST", "/api/v1/storage/read_window_aggregate") =>
-          handleReadWindowAggregate(ex)
-        case ("POST", "/api/v1/storage/tag_keys") |
-             ("POST", "/api/v1/storage/measurement_tag_keys") => handleTagKeys(ex)
-        case ("POST", "/api/v1/storage/tag_values") |
-             ("POST", "/api/v1/storage/measurement_tag_values") => handleTagValues(ex)
-        case ("POST", "/api/v1/storage/measurement_names") => handleMeasurementNames(ex)
-        case ("POST", "/api/v1/storage/measurement_fields") => handleMeasurementFields(ex)
-        case ("POST", "/api/v1/storage/read_series_cardinality") =>
-          handleSeriesCardinality(ex)
+        case ("POST", StorageService.HttpRoute(method)) =>
+          handleStorage(ex, method)
         case ("GET", "/api/v1/storage/capabilities") =>
           respondProto(ex, StorageProto.capabilitiesResponse())
         case ("GET", "/health") => respond(ex, 200, "text/plain", "OK")
@@ -501,9 +491,6 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
           respondJsonError(ex, 400, s"unknown format type: $format. " +
             "Expected one of 'pretty', 'csv' or 'json'"); return
         }
-        if (!databases.contains(db)) {
-          respondJsonError(ex, 404, s"database not found: $db"); return
-        }
         // remote query routing (the read twin of shard-routed writes,
         // reference grpc-router + server/src/lib.rs remotes): when the
         // db's shard targets map the query's tables to configured
@@ -514,36 +501,48 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     }
   }
 
-  /** Plan `q` over the db's measurement views (+ `extraViews`, which win
-    * on name collision — the scatter-gather path injects fetched remote
-    * tables) and stream the response. Planning happens under the shared
-    * temp-view catalog lock, streaming after (same pattern as do_get):
-    * spark.sql analyzes eagerly, so the plan is bound to this request's
-    * views before the lock releases. */
+  /** Plan SQL `q` over the db's measurement views (+ `extraViews`, which
+    * win on name collision — the scatter-gather path injects fetched
+    * remote tables): the one planning path of the SQL query endpoint and
+    * Flight do_get on both transports. Planning happens under the shared
+    * temp-view catalog lock, streaming after: spark.sql analyzes
+    * eagerly, so the plan is bound to this request's views before the
+    * lock releases. An unknown database is a 404, a query that does not
+    * plan a 400. */
+  private[server] def planSql(db: String, q: String,
+      extraViews: Seq[(String, DataFrame)] = Nil)
+      : Either[(Int, String), DataFrame] =
+    // existence, not emptiness: a freshly created or drop-emptied
+    // database is real — queries over it should plan (and fail with
+    // table-not-found where warranted)
+    if (!hasDatabase(db)) Left((404, s"database not found: $db"))
+    else {
+      // system tables ride the query path like the reference's
+      // system.chunks/columns/... (query_tests sql.rs:260-361 runs them
+      // through the db's query engine) — registered only when the query
+      // text mentions them, so the data hot path never pays the
+      // metadata collection
+      val sysViews =
+        if (q.toLowerCase(java.util.Locale.ROOT).contains("system_"))
+          systemViews(db)
+        else Nil
+      HttpFacade.synchronized {
+        try {
+          HttpFacade.registerMeasurementViews(spark,
+            dbTables(db).toSeq ++ sysViews ++ extraViews)
+          Right(spark.sql(q))
+        } catch {
+          case NonFatal(e) => Left((400,
+            s"query error: ${Option(e.getMessage).getOrElse(e.getClass.getName)}"))
+        }
+      }
+    }
+
+  /** Plan `q` ([[planSql]]) and stream the response. */
   private def planAndRespond(ex: HttpExchange, db: String, q: String,
       format: String, extraViews: Seq[(String, DataFrame)]): Unit = {
-        // system tables ride the query path like the reference's
-        // system.chunks/columns/... (query_tests sql.rs:260-361 runs them
-        // through the db's query engine) — registered only when the query
-        // text mentions them, so the data hot path never pays the
-        // metadata collection
-        val sysViews =
-          if (q.toLowerCase(java.util.Locale.ROOT).contains("system_"))
-            systemViews(db)
-          else Nil
-        val planned = HttpFacade.synchronized {
-          try {
-            HttpFacade.registerMeasurementViews(spark,
-              measurements(db).flatMap(m =>
-                measurementView(db, m).map(m -> _)) ++ sysViews ++ extraViews)
-            Right(spark.sql(q))
-          } catch {
-            case NonFatal(e) =>
-              Left(Option(e.getMessage).getOrElse(e.getClass.getName))
-          }
-        }
-        planned match {
-          case Left(err) => respondJsonError(ex, 400, s"query error: $err")
+        planSql(db, q, extraViews) match {
+          case Left((status, err)) => respondJsonError(ex, status, err)
           case Right(df) if format == "pretty" =>
             // pretty needs global column widths, so it stays eager — it is
             // the interactive debug format, matching the reference's own
@@ -590,9 +589,7 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     * run only if the view is actually queried). */
   private def systemViews(db: String): Seq[(String, DataFrame)] = {
     import spark.implicits._
-    val mviews = measurements(db).flatMap(m =>
-      measurementView(db, m).map(m -> _)).toMap
-    val sysColumns = graft.sources.SqlFrontend.systemColumns(spark, mviews)
+    val sysColumns = graft.sources.SqlFrontend.systemColumns(spark, dbTables(db))
     val sysChunks = chunkRows(db)
       .map(c => (c.id.toLong, c.partitionKey, c.table, c.storage, c.rowCount))
       .toDF("id", "partition_key", "table_name", "storage", "row_count")
@@ -1183,23 +1180,8 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
         respondJsonError(ex, 400, s"invalid ticket: expected " +
           """{"database_name": ..., "sql_query": ...}""")
       case Some((db, sql)) =>
-        if (!databases.contains(db)) {
-          respondJsonError(ex, 404, s"database not found: $db"); return
-        }
-        // plan under the shared temp-view catalog lock, stream after
-        val planned = HttpFacade.synchronized {
-          try {
-            HttpFacade.registerMeasurementViews(spark,
-              measurements(db).flatMap(m =>
-                measurementView(db, m).map(m -> _)))
-            Right(spark.sql(sql))
-          } catch {
-            case NonFatal(e) =>
-              Left(Option(e.getMessage).getOrElse(e.getClass.getName))
-          }
-        }
-        planned match {
-          case Left(err) => respondJsonError(ex, 400, s"query error: $err")
+        planSql(db, sql) match {
+          case Left((status, err)) => respondJsonError(ex, status, err)
           case Right(df) =>
             ex.getResponseHeaders.set("Content-Type",
               "application/vnd.apache.arrow.stream")
@@ -1262,66 +1244,37 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     }
   }
 
-  /** Storage read_filter with HTTP carrying what the tonic service puts
-    * on the wire (service.rs:212-318): the request JSON names the
-    * database + table plus an optional `[start, stop)` ns range, and the
-    * response body is ReadResponse protobuf bytes (storage_common.proto:
-    * 78-142) a storage client would decode. Frames stream out one
-    * encoded single-frame ReadResponse at a time — proto repeated-field
-    * concatenation makes the chunks one valid message, so a large series
-    * set never buffers in the facade. */
-  private def handleReadFilter(ex: HttpExchange): Unit = {
+  /** The storage RPC surface (service.rs:212-782) with HTTP carrying the
+    * tonic payloads: `POST /api/v1/storage/<method>`, the request in
+    * either encoding [[isProtoRequest]] accepts, the response body the
+    * service's protobuf response message. Both encodings decode into one
+    * [[StorageService.Call]], served by the same core as the gRPC
+    * service. The reference resolves the database from read_source
+    * org/bucket ids (service.rs get_database_name →
+    * `{org:016x}_{bucket:016x}`); a `?db=` query param overrides it for
+    * string-named databases, and `?table=` names the table when the
+    * request does not. Frames stream out one encoded single-frame
+    * ReadResponse at a time — proto repeated-field concatenation makes
+    * the chunks one valid message, so a large series set never buffers
+    * in the facade. */
+  private def handleStorage(ex: HttpExchange, method: String): Unit = {
     val raw = storageBodyBytes(ex).getOrElse(return)
-    val parsed: Either[String, (String, String, graft.core.RpcPredicate)] =
-      if (isProtoRequest(ex)) {
-        // the wire request: ReadFilterRequest protobuf — table selection
-        // arrives as the predicate's \x00 _measurement sentinel conjunct,
-        // exactly like the reference's storage clients send it
-        try {
-          val req = StorageProtoReader.decodeReadFilter(raw)
-          StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, meas) =>
-            (protoDb(ex, req), meas.orElse(queryParams(ex).get("table"))) match {
-              case (Some(db), Some(t)) => Right((db, t, pred))
-              case _ => Left("request needs read_source (or ?db=) and a " +
-                "_measurement predicate (or ?table=)")
-            }
-          }
-        } catch { case NonFatal(e) =>
-          Left(s"bad protobuf request: ${e.getMessage}") }
-      } else {
-        val body = new String(raw, UTF_8)
-        (jsonStrField(body, "database_name"), jsonStrField(body, "table")) match {
-          case (Some(db), Some(t)) => Right((db, t, predOf(body)))
-          case _ => Left("""expected {"database_name": ..., "table": ...}""")
-        }
-      }
-    parsed match {
-      case Left(err) => respondJsonError(ex, 400, err)
-      case Right((db, table, pred)) =>
-        // no catalog lock here (or in the handlers below): these plans
-        // build from measurementView over the concurrent chunk map and
-        // never touch the shared temp-view catalog the SQL endpoint
-        // synchronizes on — a slow metadata scan must not stall queries
-        measurementView(db, table).map { df =>
-          graft.operators.InfluxRpc.toFrames(
-            graft.operators.InfluxRpc.toSeriesSet(
-              graft.operators.InfluxRpc.readFilter(df, pred),
-              IoxSchema.fieldColumns(df.schema)),
-            table)
-        } match {
-          case None => respondJsonError(ex, 404, s"no table $table in database $db")
-          case Some(frames) => streamFrames(ex, frames)
-        }
+    val params = queryParams(ex)
+    val call =
+      if (isProtoRequest(ex)) StorageService.decodeProto(method, raw)
+      else StorageService.decodeJson(method, new String(raw, UTF_8))
+    call.flatMap(c => StorageService.run(this, c.copy(
+        db = params.get("db").orElse(c.db),
+        table = c.table.orElse(params.get("table"))))) match {
+      case Left((status, err)) => respondJsonError(ex, status, err)
+      case Right(StorageService.Message(bytes)) => respondProto(ex, bytes)
+      case Right(frames) =>
+        ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
+        ex.sendResponseHeaders(200, 0) // chunked
+        val os = ex.getResponseBody
+        try frames.messages.foreach(os.write) finally os.close()
     }
   }
-
-  // -------------------------------------- remaining storage RPC surface
-  // (service.rs:218-782) with HTTP carrying the tonic payloads: request
-  // JSON in, the service's protobuf response messages out. `table` and
-  // `measurement` are accepted interchangeably (the measurement_* RPC
-  // family is the measurement-scoped spelling of the same operators);
-  // omitting both on the metadata RPCs gives the reference's
-  // database-level answer (the *AcrossTables merges).
 
   private def storageBody(ex: HttpExchange): Option[String] =
     storageBodyBytes(ex).map(new String(_, UTF_8))
@@ -1342,38 +1295,6 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
   private def isProtoRequest(ex: HttpExchange): Boolean =
     Option(ex.getRequestHeaders.getFirst("Content-Type"))
       .exists(_.toLowerCase.contains("protobuf"))
-
-  /** Database for a protobuf-carried request: the reference resolves it
-    * from read_source org/bucket ids (service.rs get_database_name →
-    * `{org:016x}_{bucket:016x}`); a `?db=` query param overrides for
-    * string-named databases — the HTTP-transport bridge, same disclosure
-    * as the transport itself. */
-  private def protoDb(ex: HttpExchange,
-      req: StorageProtoReader.StorageRequest): Option[String] =
-    queryParams(ex).get("db").orElse(req.databaseName)
-
-  /** Request predicate (predicate.proto / PredicateBuilder): optional
-    * `[start, stop)` range plus the request-level restrictions the
-    * reference's storage requests carry —
-    * `"tag_eq": {"host": "a", ...}` (tag = value conjuncts),
-    * `"tag_regex": {"host": "^a.*"}` (`=~`, Java-dialect),
-    * `"fields": ["usage", ...]` (field-column restriction). */
-  private def predOf(body: String): graft.core.RpcPredicate = {
-    var p = (jsonLongField(body, "start"), jsonLongField(body, "stop")) match {
-      case (Some(s), Some(e)) => graft.core.RpcPredicate().withRange(s, e)
-      case _ => graft.core.RpcPredicate()
-    }
-    for ((k, v) <- jsonStrMapField(body, "tag_eq"))
-      p = p.withExpr(col(k) === v)
-    for ((k, re) <- jsonStrMapField(body, "tag_regex"))
-      p = p.withRegexMatch(k, re)
-    val fields = jsonStrArrayField(body, "fields")
-    if (fields.nonEmpty) p = p.withFields(fields: _*)
-    p
-  }
-
-  private def tableOf(body: String): Option[String] =
-    jsonStrField(body, "table").orElse(jsonStrField(body, "measurement"))
 
   /** All measurements of `db` as a name->view map (the database-level
     * operand of the *AcrossTables metadata ops). */
@@ -1488,9 +1409,9 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     }
   }
 
-  /** 404 for an unknown database, like the query endpoints — without
-    * this, database-level metadata RPCs would answer "exists and is
-    * empty" for a typo'd name. Returns false after responding. */
+  /** 404 for an unknown database on the partition routes — without
+    * this, they would answer "exists and is empty" for a typo'd name.
+    * Returns false after responding. */
   private def requireDb(ex: HttpExchange, db: String): Boolean =
     databases.contains(db) || {
       respondJsonError(ex, 404, s"database not found: $db"); false
@@ -1501,460 +1422,6 @@ class HttpFacade(private[server] val spark: SparkSession, port: Int = 0,
     ex.sendResponseHeaders(200, bytes.length.toLong)
     val os = ex.getResponseBody
     os.write(bytes); os.close()
-  }
-
-  /** Stream encoded frames as concatenated single-frame ReadResponse
-    * messages (valid as one message by proto repeated-field concat). */
-  private def streamFrames(ex: HttpExchange,
-      frames: org.apache.spark.sql.Dataset[graft.operators.InfluxRpc.Frame]): Unit = {
-    import scala.jdk.CollectionConverters._
-    ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
-    ex.sendResponseHeaders(200, 0) // chunked
-    val os = ex.getResponseBody
-    try frames.toLocalIterator().asScala.foreach { f =>
-      os.write(StorageProto.readResponse(Seq(StorageProto.encodeFrame(f))))
-    } finally os.close()
-  }
-
-  private[server] val aggKinds: Map[String, graft.operators.InfluxRpc.AggKind] = {
-    import graft.operators.InfluxRpc.AggKind._
-    Map("none" -> None, "sum" -> Sum, "count" -> Count, "min" -> Min,
-      "max" -> Max, "mean" -> Mean, "first" -> First, "last" -> Last)
-  }
-
-  /** Aggregate.AggregateType enum (storage_common.proto:56-66) → the
-    * facade's aggregate names. */
-  private[server] val protoAggNames: Map[Int, String] = Map(0 -> "none", 1 -> "sum",
-    2 -> "count", 3 -> "min", 4 -> "max", 5 -> "first", 6 -> "last",
-    7 -> "mean")
-
-  /** read_group (service.rs:260): group frames + member series. The
-    * response stream interleaves one GroupFrame per distinct group-key
-    * value with its member series/points pairs (data.rs:75-121). */
-  private def handleReadGroup(ex: HttpExchange): Unit = {
-    import graft.operators.InfluxRpc
-    import graft.operators.InfluxRpc.AggKind
-    val raw = storageBodyBytes(ex).getOrElse(return)
-    val parsed: Either[String,
-        (String, String, graft.core.RpcPredicate, String, Seq[String])] =
-      if (isProtoRequest(ex)) {
-        try {
-          val req = StorageProtoReader.decodeReadGroup(raw)
-          StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, meas) =>
-            (protoDb(ex, req), meas.orElse(queryParams(ex).get("table"))) match {
-              case (Some(db), Some(t)) =>
-                // reject enum values outside the proto's 0-7 range like
-                // the reference's AggregateType conversion (expr.rs
-                // convert_aggregate) instead of silently degrading to raw
-                val code = req.aggregates.headOption.getOrElse(0)
-                protoAggNames.get(code) match {
-                  case Some(aggName) =>
-                    Right((db, t, pred, aggName, req.groupKeys))
-                  case scala.None =>
-                    Left(s"unconvertible aggregate type enum: $code")
-                }
-              case _ => Left("request needs read_source (or ?db=) and a " +
-                "_measurement predicate (or ?table=)")
-            }
-          }
-        } catch { case NonFatal(e) =>
-          Left(s"bad protobuf request: ${e.getMessage}") }
-      } else {
-        val body = new String(raw, UTF_8)
-        (jsonStrField(body, "database_name"), tableOf(body)) match {
-          case (Some(db), Some(t)) =>
-            Right((db, t, predOf(body),
-              jsonStrField(body, "aggregate").getOrElse("none"),
-              jsonStrArrayField(body, "group_keys")))
-          case _ => Left("""expected {"database_name": ..., "table": ...}""")
-        }
-      }
-    val (db, table, pred, aggName, groupKeys) = parsed match {
-      case Left(err) => respondJsonError(ex, 400, err); return
-      case Right(p) => p
-    }
-    planReadGroup(db, table, pred, aggName, groupKeys) match {
-      case Left((status, err)) => respondJsonError(ex, status, err)
-      case Right(frames) => streamFrames(ex, frames)
-    }
-  }
-
-  /** Transport-neutral read_group planning core — shared by the HTTP
-    * bridge above and the gRPC service ([[StorageGrpc]]). */
-  private[server] def planReadGroup(db: String, table: String,
-      pred: graft.core.RpcPredicate, aggName: String, groupKeys: Seq[String])
-      : Either[(Int, String),
-        org.apache.spark.sql.Dataset[graft.operators.InfluxRpc.Frame]] = {
-    import graft.operators.InfluxRpc
-    import graft.operators.InfluxRpc.AggKind
-    val agg = aggKinds.get(aggName) match {
-      case Some(a) => a
-      case scala.None => return Left((400, s"unknown aggregate: $aggName"))
-    }
-    measurementView(db, table) match {
-      case scala.None => Left((404, s"no table $table in database $db"))
-      case Some(df) =>
-        val tags = IoxSchema.tagColumns(df.schema)
-        val bad = groupKeys.filterNot(tags.contains)
-        if (bad.nonEmpty)
-          Left((400,
-            s"group keys must be tag columns; not tags: ${bad.mkString(", ")}"))
-        else {
-          val out = InfluxRpc.readGroup(df, pred, agg, groupKeys)
-          val fieldCols = IoxSchema.fieldColumns(df.schema)
-          val series = agg match {
-            case AggKind.None | AggKind.Sum | AggKind.Count | AggKind.Mean =>
-              // output shape is (tags..., fields..., time): direct
-              InfluxRpc.toSeriesSet(out, fieldCols)
-            case _ =>
-              // selectors emit per-field (value, time_<field>): one
-              // series per field from its own selected timestamps; a
-              // field-less table has no series at all
-              fieldCols.map { f =>
-                InfluxRpc.toSeriesSet(
-                  out.select((IoxSchema.tagColumns(out.schema).map(col) :+
-                    col(f)) :+
-                    col(s"${graft.core.NsTime.TimeColumn}_$f")
-                      .as(graft.core.NsTime.TimeColumn): _*),
-                  Seq(f))
-              }.reduceOption(_ union _).getOrElse {
-                import df.sparkSession.implicits._
-                df.sparkSession.emptyDataset[InfluxRpc.Series]
-              }
-          }
-          Right(
-            if (agg == AggKind.None)
-              InfluxRpc.toGroupedFramesStreaming(series, table, groupKeys)
-            else InfluxRpc.toGroupedFrames(series, table, groupKeys))
-        }
-    }
-  }
-
-  /** read_window_aggregate (service.rs:339): per-series time-bucketed
-    * series frames; fixed ns or calendar-month widths. */
-  private def handleReadWindowAggregate(ex: HttpExchange): Unit = {
-    import graft.operators.InfluxRpc
-    val raw = storageBodyBytes(ex).getOrElse(return)
-    // (db, table, pred, aggName, everyNs, everyMonths, offsetNs, offsetMonths)
-    val parsed: Either[String, (String, String, graft.core.RpcPredicate,
-        String, Option[Long], Option[Long], Long, Int)] =
-      if (isProtoRequest(ex)) {
-        try {
-          val req = StorageProtoReader.decodeReadWindowAggregate(raw)
-          StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, meas) =>
-            (protoDb(ex, req), meas.orElse(queryParams(ex).get("table"))) match {
-              case (Some(db), Some(t)) if req.aggregates.size != 1 =>
-                // expr.rs:553 AggregateNotSingleton: exactly one aggregate
-                Left(s"aggregate must be a singleton, got ${req.aggregates.size}")
-              case (Some(db), Some(t)) =>
-                protoAggNames.get(req.aggregates.head) match {
-                  case scala.None =>
-                    // enum outside 0-7: reject like the reference's
-                    // AggregateType conversion, not degrade to raw
-                    Left("unconvertible aggregate type enum: " +
-                      req.aggregates.head)
-                  case Some(aggName) =>
-                    resolveProtoWindow(req).map {
-                      case (evNs, evMonths, offNs, offMonths) =>
-                        (db, t, pred, aggName, evNs, evMonths, offNs, offMonths)
-                    }
-                }
-              case _ => Left("request needs read_source (or ?db=) and a " +
-                "_measurement predicate (or ?table=)")
-            }
-          }
-        } catch { case NonFatal(e) =>
-          Left(s"bad protobuf request: ${e.getMessage}") }
-      } else {
-        val body = new String(raw, UTF_8)
-        (jsonStrField(body, "database_name"), tableOf(body)) match {
-          case (Some(db), Some(t)) =>
-            Right((db, t, predOf(body),
-              jsonStrField(body, "aggregate").getOrElse(""),
-              jsonLongField(body, "window_every"),
-              jsonLongField(body, "window_every_months"),
-              jsonLongField(body, "offset").getOrElse(0L),
-              jsonLongField(body, "offset_months").getOrElse(0L).toInt))
-          case _ => Left("""expected {"database_name": ..., "table": ...}""")
-        }
-      }
-    val (db, table, pred, aggName, everyNs, everyMonths, offsetNs, offsetMonths) =
-      parsed match {
-        case Left(err) => respondJsonError(ex, 400, err); return
-        case Right(p) => p
-      }
-    planReadWindowAggregate(db, table, pred, aggName, everyNs, everyMonths,
-        offsetNs, offsetMonths) match {
-      case Left((status, err)) => respondJsonError(ex, status, err)
-      case Right(frames) => streamFrames(ex, frames)
-    }
-  }
-
-  /** expr.rs:568-570: nonzero flat WindowEvery/Offset WIN and the
-    * `window` message is ignored; the message applies only when both
-    * flat fields are zero. The reference's convert_duration also rejects
-    * a Duration carrying BOTH nonzero months and nsecs — mixed units
-    * have no single window unit. Shared by the HTTP proto branch and
-    * the gRPC service. */
-  private[server] def resolveProtoWindow(req: StorageProtoReader.StorageRequest)
-      : Either[String, (Option[Long], Option[Long], Long, Int)] =
-    (req.window, req.windowEveryNs, req.offsetNs) match {
-      case (Some(w), 0L, 0L) =>
-        val every = w.every.getOrElse(
-          StorageProtoReader.Dur(0, 0, negative = false))
-        val off = w.offset.getOrElse(
-          StorageProtoReader.Dur(0, 0, negative = false))
-        if ((every.months != 0L && every.nsecs != 0L) ||
-            (off.months != 0L && off.nsecs != 0L))
-          Left("window Duration cannot mix months and nsecs")
-        else {
-          val offSign = if (off.negative) -1L else 1L
-          if (every.months > 0)
-            Right((scala.None, Some(every.months),
-              0L, (offSign * off.months).toInt))
-          else Right((Some(every.nsecs), scala.None,
-            offSign * off.nsecs, 0))
-        }
-      case _ =>
-        Right((Some(req.windowEveryNs), scala.None, req.offsetNs, 0))
-    }
-
-  /** Transport-neutral read_window_aggregate planning core — shared by
-    * the HTTP bridge above and the gRPC service ([[StorageGrpc]]). */
-  private[server] def planReadWindowAggregate(db: String, table: String,
-      pred: graft.core.RpcPredicate, aggName: String, everyNs: Option[Long],
-      everyMonths: Option[Long], offsetNs: Long, offsetMonths: Int)
-      : Either[(Int, String),
-        org.apache.spark.sql.Dataset[graft.operators.InfluxRpc.Frame]] = {
-    import graft.operators.InfluxRpc
-    val agg = aggKinds.get(aggName) match {
-      case Some(InfluxRpc.AggKind.None) | scala.None =>
-        return Left((400,
-          s"window aggregate requires an aggregate, got '$aggName'"))
-      case Some(a) => a
-    }
-    val everyDefined = everyNs.exists(_ != 0L) || everyMonths.isDefined
-    if (!everyDefined)
-      return Left((400, "window_every (ns) or window_every_months required"))
-    if (everyNs.exists(_ < 0L) ||
-        everyMonths.exists(m => m <= 0L || m > Int.MaxValue))
-      return Left((400, "window width must be a positive " +
-        "duration (months fit in 32 bits)"))
-    measurementView(db, table) match {
-      case scala.None => Left((404, s"no table $table in database $db"))
-      case Some(df) =>
-        val out = (everyNs.filter(_ > 0L), everyMonths) match {
-          case (Some(every), _) =>
-            InfluxRpc.readWindowAggregate(df, pred, agg, every, offsetNs)
-          case (_, months) =>
-            InfluxRpc.readWindowAggregateMonths(df, pred, agg,
-              months.get.toInt, offsetMonths)
-        }
-        Right(InfluxRpc.toFrames(
-          InfluxRpc.toSeriesSet(out, IoxSchema.fieldColumns(df.schema)),
-          table))
-    }
-  }
-
-  /** tag_keys / measurement_tag_keys (service.rs:403,661):
-    * StringValuesResponse with the 0x00/0xff measurement/field sentinels
-    * (tag_keys_to_byte_vecs, data.rs:45-56). Without a table, keys merge
-    * across the database's measurements. */
-  private def handleTagKeys(ex: HttpExchange): Unit = {
-    import graft.operators.InfluxRpc
-    val raw = storageBodyBytes(ex).getOrElse(return)
-    // (db, optional table restriction, predicate)
-    val parsed: Either[String,
-        (String, Option[String], graft.core.RpcPredicate)] =
-      if (isProtoRequest(ex)) {
-        try {
-          // the two routes this handler serves carry DIFFERENT messages:
-          // TagKeysRequest (source=1, range=2, predicate=3) vs
-          // MeasurementTagKeysRequest (source=1, measurement=2 string,
-          // range=3, predicate=4) — decoding the measurement-scoped one
-          // with the read_filter layout parses the measurement bytes as
-          // a range and drops the restriction (the gRPC path at
-          // StorageGrpc.measurementTagKeys already distinguishes them)
-          val (req, scoped) =
-            if (ex.getRequestURI.getPath.endsWith("measurement_tag_keys"))
-              StorageProtoReader.decodeMeasurementScoped(raw)
-            else (StorageProtoReader.decodeReadFilter(raw), scala.None)
-          StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, meas) =>
-            protoDb(ex, req) match {
-              case Some(db) =>
-                Right((db, scoped.orElse(meas)
-                  .orElse(queryParams(ex).get("table")), pred))
-              case scala.None => Left("request needs read_source (or ?db=)")
-            }
-          }
-        } catch { case NonFatal(e) =>
-          Left(s"bad protobuf request: ${e.getMessage}") }
-      } else {
-        val body = new String(raw, UTF_8)
-        jsonStrField(body, "database_name") match {
-          case Some(db) => Right((db, tableOf(body), predOf(body)))
-          case _ => Left("""expected {"database_name": ...}""")
-        }
-      }
-    parsed match {
-      case Left(err) => respondJsonError(ex, 400, err)
-      case Right((db, table, pred)) =>
-        if (!requireDb(ex, db)) return
-        val keys =
-          table match {
-            case Some(t) => measurementView(db, t).map(InfluxRpc.tagKeys(_, pred))
-            case scala.None => Some(InfluxRpc.tagKeysAcrossTables(dbTables(db), pred))
-          }
-        keys match {
-          case scala.None => respondJsonError(ex, 404, s"no such table in $db")
-          case Some(ks) => respondProto(ex,
-            StorageProto.stringValuesResponse(StorageProto.tagKeysByteVecs(ks)))
-        }
-    }
-  }
-
-  /** tag_values / measurement_tag_values (service.rs:456,715). The
-    * reference's meta keys are honored: `\u0000`/`_measurement` lists
-    * measurement names, `ÿ`/`_field` lists field names
-    * (service.rs:483-526). */
-  private def handleTagValues(ex: HttpExchange): Unit = {
-    import graft.operators.InfluxRpc
-    val raw = storageBodyBytes(ex).getOrElse(return)
-    // (db, optional table, tag key, predicate) — the proto tag_key bytes
-    // carry the same \x00/\xff sentinels the JSON spelling writes as
-    // " "/"ÿ"; the reader renders them "_measurement"/"_field"
-    val parsed: Either[String,
-        (String, Option[String], String, graft.core.RpcPredicate)] =
-      if (isProtoRequest(ex)) {
-        try {
-          // TagValuesRequest (tag_key=3) vs MeasurementTagValuesRequest
-          // (measurement=2, tag_key=3, range=4, predicate=5) — same
-          // two-message split as the tag-keys handler above
-          val (req, scoped) =
-            if (ex.getRequestURI.getPath.endsWith("measurement_tag_values"))
-              StorageProtoReader.decodeMeasurementTagValues(raw)
-            else (StorageProtoReader.decodeTagValues(raw), scala.None)
-          StorageProtoReader.toRpcPredicate(req).flatMap { case (pred, meas) =>
-            (protoDb(ex, req), req.tagKey) match {
-              case (Some(db), Some(tk)) =>
-                Right((db, scoped.orElse(meas)
-                  .orElse(queryParams(ex).get("table")),
-                  StorageProtoReader.renderTagKey(tk), pred))
-              case (scala.None, _) => Left("request needs read_source (or ?db=)")
-              case (_, scala.None) => Left("request needs tag_key")
-            }
-          }
-        } catch { case NonFatal(e) =>
-          Left(s"bad protobuf request: ${e.getMessage}") }
-      } else {
-        val body = new String(raw, UTF_8)
-        (jsonStrField(body, "database_name"), jsonStrField(body, "tag_key")) match {
-          case (Some(db), Some(tk)) =>
-            Right((db, tableOf(body), tk, predOf(body)))
-          case _ => Left("""expected {"database_name": ..., "tag_key": ...}""")
-        }
-      }
-    parsed match {
-      case Left(err) => respondJsonError(ex, 400, err)
-      case Right((db, table, tagKey, pred)) =>
-        if (!requireDb(ex, db)) return
-        val values: Option[Seq[String]] = {
-          val tables = dbTables(db)
-          tagKey match {
-            case "\u0000" | "_measurement" =>
-              Some(InfluxRpc.tableNames(tables, pred))
-            case "ÿ" | "_field" =>
-              table match {
-                case Some(t) => tables.get(t).map(df =>
-                  InfluxRpc.fieldColumns(df, pred).collect().map(_.getString(0)).toSeq)
-                case scala.None =>
-                  Some(InfluxRpc.fieldColumnsAcrossTables(tables, pred).map(_._1))
-              }
-            case k =>
-              table match {
-                case Some(t) => tables.get(t).map(df =>
-                  InfluxRpc.tagValues(df, k, pred)
-                    .collect().map(_.getString(0)).toSeq)
-                case scala.None =>
-                  Some(InfluxRpc.tagValuesAcrossTables(tables, k, pred))
-              }
-          }
-        }
-        values match {
-          case scala.None => respondJsonError(ex, 404, s"no such table in $db")
-          case Some(vs) => respondProto(ex,
-            StorageProto.stringValuesResponse(vs.map(_.getBytes(UTF_8))))
-        }
-    }
-  }
-
-  /** measurement_names (service.rs:605): StringValuesResponse of table
-    * names passing the predicate. */
-  private def handleMeasurementNames(ex: HttpExchange): Unit = {
-    val body = storageBody(ex).getOrElse(return)
-    jsonStrField(body, "database_name") match {
-      case Some(db) =>
-        if (!requireDb(ex, db)) return
-        val names =
-          graft.operators.InfluxRpc.tableNames(dbTables(db), predOf(body))
-        respondProto(ex,
-          StorageProto.stringValuesResponse(names.map(_.getBytes(UTF_8))))
-      case _ => respondJsonError(ex, 400, """expected {"database_name": ...}""")
-    }
-  }
-
-  /** measurement_fields (service.rs:771): MeasurementFieldsResponse with
-    * (key, FieldType, last-timestamp) per field. Without a measurement,
-    * the database-level merge (fieldlist.rs into_fieldlist). */
-  private def handleMeasurementFields(ex: HttpExchange): Unit = {
-    import graft.operators.InfluxRpc
-    val body = storageBody(ex).getOrElse(return)
-    jsonStrField(body, "database_name") match {
-      case Some(db) =>
-        if (!requireDb(ex, db)) return
-        val pred = predOf(body)
-        val fields: Option[Seq[(String, String, Long)]] =
-          tableOf(body) match {
-            case Some(t) => measurementView(db, t).map(df =>
-              InfluxRpc.fieldColumns(df, pred).collect()
-                .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq)
-            case scala.None =>
-              Some(InfluxRpc.fieldColumnsAcrossTables(dbTables(db), pred))
-          }
-        fields match {
-          case scala.None => respondJsonError(ex, 404, s"no such table in $db")
-          case Some(fs) => respondProto(ex, StorageProto.measurementFieldsResponse(
-            fs.map { case (n, t, ts) => (n, StorageProto.fieldTypeOf(t), ts) }))
-        }
-      case _ => respondJsonError(ex, 400, """expected {"database_name": ...}""")
-    }
-  }
-
-  /** read_series_cardinality (service.rs:560 — declared but
-    * unimplemented there; completed here): Int64ValuesResponse with the
-    * distinct-series count. Without a table, series sum across the
-    * database's measurements (series are per-table tag sets). */
-  private def handleSeriesCardinality(ex: HttpExchange): Unit = {
-    import graft.operators.InfluxRpc
-    val body = storageBody(ex).getOrElse(return)
-    jsonStrField(body, "database_name") match {
-      case Some(db) =>
-        if (!requireDb(ex, db)) return
-        val pred = predOf(body)
-        val exact = !jsonStrField(body, "mode").contains("estimate")
-        val n: Option[Long] =
-          tableOf(body) match {
-            case Some(t) => measurementView(db, t)
-              .map(InfluxRpc.seriesCardinality(_, pred, exact))
-            case scala.None => Some(dbTables(db).values
-              .map(InfluxRpc.seriesCardinality(_, pred, exact)).sum)
-          }
-        n match {
-          case scala.None => respondJsonError(ex, 404, s"no such table in $db")
-          case Some(v) => respondProto(ex, StorageProto.int64ValuesResponse(Seq(v)))
-        }
-      case _ => respondJsonError(ex, 400, """expected {"database_name": ...}""")
-    }
   }
 
   // ------------------------------------------------- management surface
